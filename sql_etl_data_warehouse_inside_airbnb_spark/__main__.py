@@ -29,7 +29,10 @@ from __future__ import annotations
 
 import sys
 
-from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
+from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import (
+    CORE_TABLES,
+    run_pipeline,
+)
 from sql_etl_data_warehouse_inside_airbnb_spark.session import get_spark
 
 
@@ -113,8 +116,7 @@ def main(argv: list[str]) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     tables = run_pipeline(spark, data_dir, output_dir,
                           incremental=incremental, reviews_cap=reviews_cap)
-    for name in ("dim_listings", "dim_listing_id_map", "dim_hosts",
-                 "dim_dates", "fact_calendar", "fact_reviews"):
+    for name in CORE_TABLES:
         n = tables.stats.get(name, getattr(tables, name).count())
         print(f"{name}: {n} rows")
     spark.stop()

@@ -8,8 +8,9 @@ scripts re-expressed as column projections over the dims/facts.
 - review language detection (scripts/app/language_detection.py:41-154):
   fact_reviews gains ``review_lang`` from the first 100 chars of
   comments, ``'und'`` for empty/undetectable — the reference's only
-  must-be-a-UDF, available here both as a JVM column expression
-  (n-gram heuristic, default) and as the pandas-UDF variant.
+  must-be-a-UDF, computed here as a JVM column expression (n-gram
+  heuristic, functions/text.py:lang_id; the pandas-UDF variant
+  ``lang_id_udf`` lives beside it).
 
 The reference mutates tables in place (ALTER + UPDATE); here each pass
 returns a new projection — same columns, no shuffle (narrow transforms
@@ -21,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sql_etl_data_warehouse_inside_airbnb_spark.functions.text import (
-    lang_id,
-    lang_id_udf,
-)
+from sql_etl_data_warehouse_inside_airbnb_spark.functions.text import lang_id
 
 # scripts/maintenance/pretreatment.py:16-22 (states + territories)
 US_STATE_ABBREVS = [
@@ -66,16 +64,12 @@ def pretreat_listings(dim_listings: DataFrame) -> DataFrame:
                 .otherwise(F.lit(False))))
 
 
-def add_review_lang(fact_reviews: DataFrame,
-                    use_udf: bool = False) -> DataFrame:
+def add_review_lang(fact_reviews: DataFrame) -> DataFrame:
     """fact_reviews + review_lang from comments[:100]; 'und' when
     empty/undetectable (language_detection.py:56,79-81). The column
-    expression path stays JVM-side; ``use_udf=True`` exercises the
-    Arrow-batched pandas-UDF surface instead."""
-    head = F.substring(F.col("comments"), 1, 100)
-    detect = lang_id_udf(head) if use_udf else lang_id(head)
+    expression stays JVM-side."""
     return fact_reviews.withColumn(
         "review_lang",
         F.when(F.col("comments").isNull()
                | (F.length(F.trim("comments")) == 0), F.lit("und"))
-        .otherwise(detect))
+        .otherwise(lang_id(F.substring(F.col("comments"), 1, 100))))

@@ -174,3 +174,68 @@ def test_reject_slices_distinct_for_identical_basenames(spark, tmp_path):
     # both loads' rejects survive in the cumulative log
     log = spark.read.parquet(os.path.join(str(out), "rejects_listings"))
     assert log.count() == 2
+
+
+def test_failed_rebuild_leaves_live_warehouse_intact(spark, tmp_path,
+                                                     monkeypatch):
+    """A non-incremental rebuild over a live warehouse commits through
+    the staged swap like every other run: when one table's write fails,
+    no live table has changed, and the next incremental run loads the
+    intact day-1 state."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from sql_etl_data_warehouse_inside_airbnb_spark.plans import etl
+
+    out = tmp_path / "wh"
+    t1 = run_pipeline(spark, str(_day1(tmp_path)), str(out))
+    day1_counts = {n: t1.stats[n] for n in etl.CORE_TABLES}
+
+    rebuild = tmp_path / "rebuild"
+    rebuild.mkdir()
+    _wgz(rebuild, "France_Paris_listings_2025-06-08.csv.gz", LISTING_COLS, [
+        [101, 9001, "Ana", "Paris, France", "Marais", "48.85", "2.35",
+         "$100.00", "10", "4.50", "2"],
+        [102, 9002, "Bob", "Lyon, France", "Opera", "48.87", "2.33",
+         "$80.00", "5", "4.00", "1"],
+    ])
+    _wgz(rebuild, "France_Paris_reviews_2025-06-08.csv.gz", REVIEW_COLS, [
+        [101, 1, "2025-05-01", 71, "Zoe", "nice"],
+        [102, 2, "2025-06-09", 72, "Yan", "good"],
+    ])
+    # fact_reviews is written last: every other table is written first
+    monkeypatch.setattr(etl, "add_review_lang", lambda df: df.withColumn(
+        "review_lang",
+        F.raise_error(F.lit("injected write failure")).cast("string")))
+    with pytest.raises(Exception, match="injected write failure"):
+        run_pipeline(spark, str(rebuild), str(out))
+    monkeypatch.undo()
+
+    for name, n in day1_counts.items():
+        assert spark.read.parquet(str(out / name)).count() == n, name
+    t3 = run_pipeline(spark, str(rebuild), str(out), incremental=True)
+    assert t3.stats["dim_listings"] == 2
+    assert t3.stats["fact_reviews"] == 2
+    assert t3.stats["fact_calendar"] == 1
+
+
+def test_empty_warehouse_matches_builder_schemas(spark, tmp_path):
+    """Each empty-warehouse schema equals its builder's output (minus
+    the re-derived enrichment columns) in names, order and types: a
+    drifted placeholder would widen the day-1 unions and poison the next
+    reload's unionByName. The empty prior must also plan as an empty
+    LocalRelation, so day-1 fact_calendar carries no anti-join."""
+    from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import (
+        CORE_TABLES,
+        EMPTY_WAREHOUSE,
+        ENRICHMENT_COLUMNS,
+    )
+
+    t = run_pipeline(spark, str(_day1(tmp_path)))
+    for name in CORE_TABLES:
+        got = getattr(t, name).drop(*ENRICHMENT_COLUMNS).schema
+        want = spark.createDataFrame([], EMPTY_WAREHOUSE[name]).schema
+        assert ([(f.name, f.dataType) for f in got]
+                == [(f.name, f.dataType) for f in want]), name
+    plan = t.fact_calendar._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in plan, plan
